@@ -9,11 +9,6 @@ representatives (e87 modality coverage), D18 a second representative
 variant (d127), and the brief's "language-ID (n-gram heuristic)" gets a
 true character-n-gram implementation (t18 — t1 is marker-word based).
 
-Registered AFTER stewardship (queries.py imports this module last) so
-the seven promised stewardship slots stay at the backlog head; with a
-7+8 = 15-entry backlog the whole batch grades inside the single r7
-window (CLAUDE.md rotation contract; simulated before registration).
-
 Reference: the reference repo (six MLlib utilities,
 spark_ml_features.py:1-315) has no curation surface; SURVEY §2-E
 north-star scope.

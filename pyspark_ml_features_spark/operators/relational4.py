@@ -5,9 +5,8 @@ skew-aggregation rewrite, and deterministic hash-based sampling.
 
 Every query carries an exact DuckDB oracle (CLAUDE.md conventions:
 identical aliases both sides, integer-exact measures via floor→BIGINT,
-count(*) cast BIGINT). They land in DEFERRED_ORACLES for the round-5
-grading window; `scripts/drive_contract.py` and the sf0.1 parity sweep
-hash-verify them locally now.
+count(*) cast BIGINT); `scripts/drive_contract.py` and the sf0.1 parity
+sweep hash-verify them locally.
 
 Reference: the reference repo (682 LoC of six ML utilities,
 spark_ml_features.py:1) has no relational surface; these are SURVEY §2-D

@@ -6,10 +6,9 @@ native ASOF JOIN.
 
 Every query carries an exact DuckDB oracle (CLAUDE.md conventions:
 identical aliases both sides, integer-exact money via floor→BIGINT cents,
-count(*) cast BIGINT, date outputs cast TIMESTAMP both sides). They land
-in DEFERRED_ORACLES for the round-5 grading window;
+count(*) cast BIGINT, date outputs cast TIMESTAMP both sides);
 ``scripts/drive_contract.py`` and the sf0.1 parity sweep hash-verify them
-locally now.
+locally.
 
 Reference: the reference repo (682 LoC of six ML utilities,
 spark_ml_features.py:1) has no temporal-join surface; these are SURVEY

@@ -8,9 +8,8 @@ partition-offset cumsum powering quantile normalization.
 
 Every query carries an exact DuckDB oracle (CLAUDE.md conventions:
 identical aliases both sides, BIGINT casts on counts, 6-dp rounds on any
-cross-row float aggregate). They land in DEFERRED_ORACLES for the
-round-5 grading window; ``scripts/drive_contract.py`` and the sf0.1
-parity sweep hash-verify them locally now.
+cross-row float aggregate); ``scripts/drive_contract.py`` and the sf0.1
+parity sweep hash-verify them locally.
 
 Reference: the reference repo (682 LoC of six ML utilities,
 spark_ml_features.py:1) has no window/map/JSON/decimal surface; these are

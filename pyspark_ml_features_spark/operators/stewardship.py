@@ -3,12 +3,6 @@ clusters, rolling-audience distinct counts, vocabulary concentration, and
 tokenizer fertility — the governance/monitoring queries a curation
 platform runs ON TOP of the dedup/quality families.
 
-Registered LAST (queries.py imports this module after everything else),
-so these four oracle queries sit at the tail of the ungraded backlog and
-defer to the round-7 window without displacing any round-6 slot (the
-self-rotation contract in CLAUDE.md; simulated against the landed r05
-grades before registration).
-
 Reference: the reference repo (six MLlib utilities) has no stewardship
 surface; SURVEY §2-E north-star scope.
 """

@@ -5,10 +5,6 @@ the remaining high-value oracle class is COMPOSITIONS: chain several
 E-family operators, invert the chain, and let the original corpus be
 the oracle — any slip in ANY stage's arithmetic breaks the hash.
 
-Registered LAST (queries.py imports this module after surface9) per the
-CLAUDE.md rotation contract: post-r09 the backlog is empty, so these
-register as the r10 window's backlog head and grade same-round.
-
 Reference: the reference repo (six MLlib utilities,
 spark_ml_features.py:1-315) has none of this surface; SURVEY §2-E
 north-star scope (E1 dedup + chunking + packing families composed).

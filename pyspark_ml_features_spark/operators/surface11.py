@@ -5,10 +5,6 @@ driver-graded large-star/small-star connected-components variant
 several already-graded operators and grade a property the chain must
 preserve — a corpus partition for e108, closure equality for e109.
 
-Registered LAST (queries.py imports this module after surface10) per the
-CLAUDE.md rotation contract: post-r10 the backlog is empty, so these
-register at the r11 window's backlog head and grade same-round.
-
 Reference: the reference repo (six MLlib utilities,
 spark_ml_features.py:1-315) has none of this surface; SURVEY §2-E/§2-F
 north-star scope (quality filtering, dedup, graph clustering composed).

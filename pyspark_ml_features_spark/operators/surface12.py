@@ -8,10 +8,6 @@ composition-oracle doctrine: chain already-graded operators and grade a
 property the chain must preserve — a corpus partition whose every row
 depends on every upstream stage.
 
-Registered LAST (queries.py imports this module after surface11) per the
-CLAUDE.md rotation contract: post-r11 the backlog is empty, so these
-register at the r12 window's backlog head and grade same-round.
-
 Reference: the reference repo (six MLlib utilities,
 spark_ml_features.py:1-315) has none of this surface; SURVEY §2-E
 north-star scope (similarity search, dedup, multimodal, packing

@@ -13,10 +13,6 @@ probe depth is exactly replayable in DuckDB: a pair's FIRST depth is 0
 if the buckets are equal, j if they differ in exactly bit j-1, NULL if
 they differ in ≥2 bits (unreachable by Hamming-1 probing).
 
-Registered LAST (queries.py imports this module after surface12) per the
-CLAUDE.md rotation contract: post-r12 the backlog is empty, so e115
-registers at the r13 window's backlog head and grades next round.
-
 Reference: the reference repo (six MLlib utilities) has none of this
 surface; SURVEY §2-E north-star scope (similarity search at scale).
 """

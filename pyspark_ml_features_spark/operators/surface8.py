@@ -5,11 +5,6 @@ single-query families (E5 per-dimension min-max scaling, D11 scale-safe
 bottom-k WITH TIES), and two LLM-curation audits (chunk-stitch
 round-trip — the e23 inverse — and a cross-source template matrix).
 
-Registered LAST (queries.py imports this module after curation7) per
-the CLAUDE.md rotation contract: post-r07 the backlog is empty, so
-these become the r8 window's backlog head and grade same-round
-(simulated against the landed grades before registration).
-
 Reference: the reference repo (six MLlib utilities,
 spark_ml_features.py:1-315) has none of this surface; SURVEY §2-C/D/E
 north-star scope.

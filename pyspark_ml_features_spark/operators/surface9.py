@@ -5,10 +5,6 @@ a UDTF whose OUTPUT SCHEMA is computed from the input table's schema in
 ``analyze()``, the Spark 4 surface beyond d109's fixed-returnType
 table-arg shape).
 
-Registered LAST (queries.py imports this module after surface8) per the
-CLAUDE.md rotation contract: post-r08 the backlog is empty, so these
-register as the r9 window's backlog head and grade same-round.
-
 Reference: the reference repo (six MLlib utilities,
 spark_ml_features.py:1-315) has none of this surface; SURVEY §2-D/E
 north-star scope.

@@ -55,23 +55,6 @@ def register(name: str, oracle: str | None = None,
     return wrap
 
 
-def reorder(priority: list[str]) -> None:
-    """Reorder the registry so ``priority`` names come first, in the given
-    order; everything else keeps its relative order after them.
-
-    The driver grades a bounded prefix (50 in round 1) of the declared
-    queries in registration order, so the prefix must hold the queries whose
-    CORRECTNESS rows matter most this round (VERDICT.md r1, item 2).
-    """
-    missing = [n for n in priority if n not in _REGISTRY]
-    if missing:
-        raise ValueError(f"reorder: unknown queries {missing}")
-    rest = [n for n in _REGISTRY if n not in set(priority)]
-    ordered = {n: _REGISTRY[n] for n in [*priority, *rest]}
-    _REGISTRY.clear()
-    _REGISTRY.update(ordered)
-
-
 def all_queries() -> dict[str, Query]:
     # Import for side effects: operator modules register on import.
     from pyspark_ml_features_spark import queries as _  # noqa: F401

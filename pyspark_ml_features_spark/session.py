@@ -16,6 +16,24 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SEED = 42
 
+# Runtime confs every session needs, applied at build time by get_spark and
+# re-applied to an externally provided session by tune_session.
+ENGINE_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    # Driver tables store naive timestamps; align Spark's session-local
+    # interpretation with DuckDB's naive reading for oracle parity.
+    ("spark.sql.session.timeZone", "UTC"),
+)
+
+
+def _default_driver_memory() -> str:
+    """16g, capped at 3/4 of physical RAM so the driver heap fits the host."""
+    ram_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(16 * 1024, ram_mib * 3 // 4)}m"
+
 
 def get_spark(app_name: str = "pyspark-ml-features-spark",
               master: str | None = None,
@@ -30,15 +48,12 @@ def get_spark(app_name: str = "pyspark-ml-features-spark",
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=dict(ENGINE_CONFS))
         .config("spark.sql.shuffle.partitions",
                 str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", "32")))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         # keep catalog artifacts (bucketed-table tests) out of the repo
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/pmfs-warehouse"))
@@ -86,15 +101,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     operators rely on (AQE, Arrow) are set without rebuilding it.
     """
     _ship_package(spark)
-    for key, value in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        # Driver tables store naive timestamps; align Spark's session-local
-        # interpretation with DuckDB's naive reading for oracle parity.
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
+    for key, value in ENGINE_CONFS:
         try:
             spark.conf.set(key, value)
         except Exception:  # immutable conf on some builds — fine, it's a default

@@ -1,481 +1,35 @@
-"""Registry ordering contract: the driver grades a bounded prefix (50 in
-round 1) of the declared queries in registration order, so the prefix must
-be exactly the curated DRIVER_WINDOW — a silent reordering (e.g. a new
-module import shifting registrations) would waste graded slots."""
+"""Registry contract: every operator module that declares queries is
+imported for registration, query names are unique, and COVERAGE.md is
+regenerated whenever a grade file lands."""
 
 from __future__ import annotations
 
-import json
+import re
+import sys
 from pathlib import Path
 
-from pyspark_ml_features_spark import queries, registry
+from pyspark_ml_features_spark import registry
+
+PKG = Path(registry.__file__).parent
 
 
-def test_driver_window_is_registry_prefix():
-    names = list(registry.all_queries())
-    assert names[:len(queries.DRIVER_WINDOW)] == queries.DRIVER_WINDOW
-
-
-def test_driver_window_is_50():
-    assert len(queries.DRIVER_WINDOW) == 50
-
-
-# Oracle queries deliberately left outside the graded window, with why.
-# The round-4 rotation cleared the pre-existing backlog; entries below
-# landed AFTER the r4 window filled (locally hash-verified by
-# drive_contract.py and the sf0.1 parity sweep; rotate into the r5
-# window).
-DEFERRED_ORACLES: set[str] = {
-    "d80_group_by_all",
-    "d81_forward_fill",
-    "d82_regexp_extract_all",
-    "d83_pandas_udaf",
-    "d84_array_set_algebra",
-    "t13_zipf_rank_table",
-    "e43_tfidf_cosine_pairs",
-    "a19_dynamic_partition_overwrite",
-    "d85_explode_outer",
-    "e44_sha_content_dedup",
-    "d86_tpch_q12",
-    "d87_null_safe_join",
-    "d88_union_by_name",
-    "d89_skew_salted_agg",
-    "d90_hash_sample_agg",
-    "e45_dup_clusters_cc",
-    "d91_equidepth_histogram",
-    "e46_lsh_quality_report",
-    "e47_incremental_cc",
-    "d92_cube_grouping_id",
-    "d93_cumulative_distinct_users",
-    "e48_centroid_outliers",
-    "a20_temp_views_sql",
-    "d94_multiset_ops",
-    "e49_signature_store_pairs",
-    "e50_threshold_sweep",
-    "d95_interval_overlap_join",
-    "d96_pivot_daily_mix",
-    "d97_ohlc_bars",
-    "d98_asof_backward",
-    "e51_greedy_packing",
-    "e52_bloom_decontaminate",
-    "d99_stratified_quota_sample",
-    "d100_changelog_compact",
-    "e53_oov_rate",
-    "d101_snapshot_diff",
-    "e54_dataset_card",
-    "a21_orc_sink_roundtrip",
-    "e55_ngram_decontaminate",
-    "d102_window_distribution",
-    "d103_map_hof_pipeline",
-    "d104_nested_json_inline",
-    "d105_decimal_ledger",
-    "d106_quantile_normalize",
-    "e56_khop_reach",
-    "e57_lang_mix_rebalance",
-    "t14_lexical_diversity",
-    "d107_rolling_median",
-    "d108_collation_distinct",
-    "e58_semantic_dup_clusters",
-    "t15_readability",
-    "a22_python_sink_roundtrip",
-    "d109_udtf_table_arg",
-    "e59_triangle_count",
-    "e60_pagerank",
-    "d110_parameterized_sql",
-    "a23_csv_malformed_tolerant",
-    "t16_gopher_rules",
-    "e61_qgram_fuzzy_join",
-    "e62_split_leakage_report",
-    "e63_sorted_neighborhood",
-    "e64_multipass_sorted_neighborhood",
-    "a24_ctas_insert_roundtrip",
-    "e65_mixture_epoch_expansion",
-    "e66_cluster_split_no_leakage",
-    "e67_cluster_minhash_signatures",
-    "d111_rollup_share_of_parent",
-    "e68_cluster_pair_similarity",
-    "d112_loo_target_encoding",
-    "a25_xml_sink_roundtrip",
-    "e69_dup_span_report",
-    "d113_sql_udf",
-    "e70_token_budget_selection",
-    "e71_image_resize",
-    "a26_text_source_roundtrip",
-    "e72_audio_resample",
-    "d114_ab_welch_ttest",
-    "d115_ewma_decay",
-    "e74_transition_matrix",
-    "d116_chi_square_independence",
-    "d117_constraint_audit",
-    "d118_count_min_sketch",
-    "d119_k_anonymity",
-    "e75_feature_hashing",
-    "a27_multipath_read",
-    "d120_rfm_features",
-    # round-6 additions: in the recomputed r6 window (the 8 padding
-    # slots), listed here so they stay declared if a later addition
-    # reorders the backlog before their grades land
-    "e77_packed_boundaries",
-    "e78_length_bucketed_batches",
-    "e79_curriculum_phases",
-    "e80_boilerplate_ngrams",
-    "e81_token_drift",
-    "d121_sql_pipe_syntax",
-    "d122_blocked_linkage",
-    "d123_rolling_anomaly",
-    # registered at the backlog TAIL (stewardship module, imported last
-    # in queries.py) — deliberately outside the full r6 window, grade r7
-    "e82_golden_record",
-    "e83_tokenizer_fertility",
-    "d124_sliding_distinct_users",
-    "t17_vocab_concentration",
-    "d125_scd2_temporal_join",
-    "e85_packing_utilization",
-    "d126_time_to_convert",
-    # round-7 batch (operators/curation7.py, imported after stewardship):
-    # all 8 inside the r7 window (15-entry backlog), grades land r7
-    "e86_length_band_trim",
-    "e87_modality_coverage",
-    "d127_pipe_syntax_join_window",
-    "e88_ngram_novelty",
-    "e89_balanced_shards",
-    "t18_char_ngram_langid",
-    "e90_chunk_dedup_stats",
-    "d128_conditional_null_matrix",
-    "e91_temperature_mixture",
-    "d129_lateral_column_alias",
-    "a28_binaryfile_scan",
-    "e92_incremental_packing",
-    "e93_quality_decile_dup_rate",
-    "a29_multiline_csv_roundtrip",
-    "e94_dedup_provenance",
-    # round-8 batch (surface8.py, registered last; backlog was empty
-    # post-r07 so the whole batch heads the r8 window and grades
-    # same-round — simulated before registration)
-    "d130_pipe_extend_set_drop",
-    "d131_group_order_by_all",
-    "d133_sql_session_variables",
-    "d134_execute_immediate",
-    "d135_nth_value_frames",
-    "d11b_bottomk_with_ties",
-    "e5b_dimension_minmax_scale",
-    "e95_chunk_stitch_roundtrip",
-    "e96_cross_source_template_matrix",
-    "d136_unpivot_sql",
-    "d137_limit_offset_pagination",
-    "d138_identifier_clause",
-    "e97_qa_sample_pack",
-    "d139_listagg_within_group",
-    "d140_bitmap_distinct",
-    "d141_from_csv_codec",
-    "a30_insert_default_columns",
-    "a31_metadata_columns",
-    "d142_observed_quality_metrics",
-    "d143_transpose",
-    "d144_sql_scripting",
-    # -- round-9 batch (surface9.py, registered last; backlog head of the
-    #    r9 window — locally hash-verified by drive_contract.py)
-    "e98_png_decode",
-    "d145_polymorphic_udtf",
-    "d146_recursive_month_spine",
-    "d147_xml_roundtrip",
-    "e99_image_content_dedup",
-    "e101_image_ahash_neardup",
-    "e102_image_hamming_pairs",
-    "d148_sql_table_function",
-    "e103_image_neardup_clusters",
-    # -- round-11 batch: streaming-exact promotions (streaming/events.py,
-    #    adjacent to s14-s16) + the surface11 tail module; backlog was
-    #    empty post-r10 so the whole batch heads the r11 window and
-    #    grades same-round — locally hash-verified at sf0.01 AND sf0.1
-    "s17_streaming_new_users_exact",
-    "s18_streaming_merge_rollup_exact",
-    "e108_quality_filter_chain_audit",
-    "e109_dup_clusters_cc_star",
-    "s19_streaming_stateful_totals_exact",
-    "e110_decontam_pack_audit",
-    "e111_langid_mix_chain",
-    # r12 tail batch (surface12, imported last): backlog empty post-r11,
-    # grades same-round — locally hash-verified at sf0.01 AND sf0.1
-    "e112_semantic_dedup_chain",
-    "e113_image_pack_chain",
-    "e114_incremental_semantic_dedup",
-    # r13 tail (surface13, imported last): backlog empty post-r12,
-    # grades same-round — locally hash-verified at sf0.01 AND sf0.1
-    "e115_multiprobe_lsh_recall",
-    # r13-extension tail (driver re-opened the round): backlog was
-    # {e115} when e116 registered, so both grade in CORRECTNESS_r13 —
-    # locally hash-verified at sf0.01 AND sf0.1
-    "e116_or_banding_recall",
-}
-
-
-def _driver_green() -> set[str]:
-    """Queries with a green hash-match row in ANY past driver round."""
-    green = set()
-    for path in sorted(Path(__file__).parent.parent.glob("CORRECTNESS_r*.json")):
-        for name, row in json.loads(path.read_text()).items():
-            if row.get("err") is None and row.get("hash_match"):
-                green.add(name)
-    return green
-
-
-def test_deferred_queries_are_driver_green_or_rows_only():
-    """Everything pushed past the graded window must be already
-    driver-verified in a past round, a rows-only query (weak check only),
-    or explicitly deferred with a reason above."""
-    green = _driver_green()
+def test_every_registering_module_is_imported():
+    """A module left out of queries.py's import list would silently drop
+    its queries from the registry."""
     qs = registry.all_queries()
-    deferred = list(qs)[len(queries.DRIVER_WINDOW):]
-    for name in deferred:
-        assert (name in green or qs[name].oracle is None
-                or name in DEFERRED_ORACLES), (
-            f"{name} is outside the graded window but has an unverified "
-            f"oracle — promote it into DRIVER_WINDOW")
-
-
-def _assert_window_invariants(window, green, seen, qs):
-    """Structural invariants of a recomposed window, valid for ANY backlog
-    size. Three consecutive rounds (r3→r5) a rotation test went red when
-    real grades landed, each time because an assertion quietly assumed the
-    ungraded backlog overfills the 50-slot window; this helper replaces
-    those assumptions with composition rules that hold from backlog=300
-    down to backlog=0 (saturation):
-
-      1. exactly 50 slots, no duplicates;
-      2. the backlog prefix: the window's ungraded-oracle entries are, in
-         order, a prefix of PRIORITY_BACKLOG-then-registration-order;
-      3. no slot is wasted: a padding entry (rows-only re-run or green
-         oracle) may appear only if EVERY backlog entry is in the window;
-      4. fresh rows-only slots beyond the FRESH_SLOTS reservation are
-         legitimate ONLY when no backlog entry was displaced for them
-         (_compute_window floods ALL never-run rows-only queries in
-         when the backlog is smaller than the cut — the cap is on
-         DISPLACEMENT, not on count);
-      5. padding order: green oracles only after all rows-only re-runs
-         are exhausted (re-runs are free weak checks, greens are not).
-    """
-    assert len(window) == 50
-    assert len(set(window)) == 50
-    backlog = [n for n in qs if qs[n].oracle is not None and n not in green]
-    priority = [n for n in queries.PRIORITY_BACKLOG if n in backlog]
-    expected_backlog = priority + [n for n in backlog if n not in priority]
-    in_window_backlog = [n for n in window if n in set(backlog)]
-    assert in_window_backlog == expected_backlog[:len(in_window_backlog)], (
-        "backlog entries out of priority/registration order")
-    fresh = [n for n in window if qs[n].oracle is None and n not in seen]
-    rerun = [n for n in window if qs[n].oracle is None and n in seen]
-    saturated = [n for n in window
-                 if qs[n].oracle is not None and n in green]
-    if rerun or saturated:
-        missing = set(expected_backlog) - set(window)
-        assert not missing, (
-            f"padding slots present while backlog entries are excluded: "
-            f"{sorted(missing)[:5]}")
-    # _compute_window RESERVES FRESH_SLOTS (positions the cut so at most
-    # FRESH_SLOTS fresh entries displace backlog), but when the backlog
-    # is smaller than the cut ALL never-run rows-only queries flow in —
-    # fresh beyond the reservation is legitimate exactly like padding:
-    # only when no backlog entry was displaced for it.
-    if len(fresh) > queries.FRESH_SLOTS:
-        missing = set(expected_backlog) - set(window)
-        assert not missing, (
-            f"more than FRESH_SLOTS fresh entries while backlog entries "
-            f"are excluded: {sorted(missing)[:5]}")
-    all_reruns = [n for n in qs if qs[n].oracle is None and n in seen]
-    if saturated:
-        assert set(all_reruns) <= set(window), (
-            "green-oracle padding used while free rows-only re-runs remain")
-
-
-def test_window_has_no_already_green_oracle_queries():
-    """Graded slots are scarce: an oracle query that is already green in a
-    past round must not occupy a graded slot (rows-only queries are exempt
-    — their weak rows-ran check is re-run each round for free). Exception:
-    once every UNGRADED oracle already sits in the window, green re-grades
-    are legitimate padding (and at full saturation they are all that is
-    left). _compute_window enforces this automatically the moment new
-    CORRECTNESS grades land; this test is the tripwire that it did."""
-    green = _driver_green()
-    qs = registry.all_queries()
-    backlog = {n for n, q in qs.items()
-               if q.oracle is not None and n not in green}
-    if backlog <= set(queries.DRIVER_WINDOW):
-        # Every ungraded oracle is already in the window — green padding
-        # (if any) wastes nothing.
-        return
-    for name in queries.DRIVER_WINDOW:
-        if qs[name].oracle is not None:
-            assert name not in green, (
-                f"{name} already has a green driver row — rotate it out")
-
-
-def test_live_window_satisfies_composition_invariants():
-    """The window the driver will actually grade, checked against the full
-    invariant set with the REAL grade files on disk — whatever state those
-    are in. This is the test that must stay green as each future round's
-    CORRECTNESS_r*.json lands."""
-    green, seen = queries._driver_grades()
-    qs = registry.all_queries()
-    manual_oracles = [n for n in queries.MANUAL_WINDOW_R4
-                      if n in qs and qs[n].oracle is not None]
-    if not any(n in green for n in manual_oracles):
-        return  # pre-r4 grades: curated window returned verbatim
-    _assert_window_invariants(queries.DRIVER_WINDOW, green, seen, qs)
-
-
-def test_tail_registered_queries_defer_while_r6_in_flight():
-    """The stewardship batch (tail-registered in queries.py) must stay
-    OUT of the grading window while the round-6 grades are still
-    pending — if an import reorder or grade change rotates them in, they
-    evict slots the r6 window already promised. Once the r6 grades land
-    (detectable: e76 gets its first driver row), the four rotate in by
-    design and this tripwire stands down."""
-    tail = {"e82_golden_record", "e83_tokenizer_fertility",
-            "d124_sliding_distinct_users", "t17_vocab_concentration",
-            "d125_scd2_temporal_join", "e85_packing_utilization",
-            "d126_time_to_convert"}
-    _, seen = queries._driver_grades()
-    if "e76_curation_funnel" in seen:
-        return  # r6 (or later) grades landed — deferral over, by design
-    offenders = tail & set(queries.DRIVER_WINDOW)
-    assert not offenders, (
-        f"tail-registered queries rotated into the in-flight r6 window "
-        f"(import order changed in queries.py?): {sorted(offenders)}")
-
-
-def test_auto_rotation_keeps_manual_window_while_ungraded():
-    """Before the round-4 grades land, the promised window must be the
-    curated one verbatim (mid-round composition stability)."""
-    qs = registry.all_queries()
-    manual_oracles = {n for n in queries.MANUAL_WINDOW_R4
-                      if qs[n].oracle is not None}
-    green = _driver_green()
-    if not (green & manual_oracles):
-        assert queries.DRIVER_WINDOW == queries.MANUAL_WINDOW_R4
-
-
-def test_auto_rotation_recomposes_once_grades_land():
-    """Simulate CORRECTNESS_r04 grading the whole manual window green: the
-    next window must lead with the ungraded oracle backlog
-    (PRIORITY_BACKLOG promoted to the head, then registration order) and
-    waste no slot. `seen` covers every rows-only query so no fresh slots
-    are reserved in this simulation.
-
-    Simulation hygiene (VERDICT r4 defect 1, r5 defect 1): the simulated
-    green set is built by UNION with the real driver grades, never by
-    subtracting from them, and the assertions are the backlog-size-agnostic
-    invariant set — the r5 red came from this test's `all(... not in
-    green)` silently assuming the simulated backlog still overfills 50
-    slots, which stopped being true the moment the real r05 grades
-    landed."""
-    qs = registry.all_queries()
-    green = _driver_green() | set(queries.MANUAL_WINDOW_R4)
-    seen = green | {n for n, q in qs.items() if q.oracle is None}
-    window = queries._compute_window(green, seen)
-    _assert_window_invariants(window, green, seen, qs)
-
-
-def test_auto_rotation_retries_driver_failures():
-    """A window entry the driver errored on (no hash-green row) must stay
-    in the recomposed window — failures are retried, not dropped.
-
-    The simulated failure is drawn from the CURRENT recomposed window and
-    removed from a green set built over real-green ∪ that window, so the
-    scenario stays valid no matter which real grades land later (the r4
-    version subtracted from a frozen manual list and went red the moment
-    CORRECTNESS_r04 arrived)."""
-    qs = registry.all_queries()
-    green, seen = queries._driver_grades()
-    window_now = queries._compute_window(green, seen)
-    oracle_entries = [n for n in window_now if qs[n].oracle is not None]
-    if not oracle_entries:
-        return  # saturated registry: nothing left to retry
-    failed = oracle_entries[0]
-    sim_green = (green | set(window_now)) - {failed}
-    sim_seen = seen | set(window_now)
-    window_next = queries._compute_window(sim_green, sim_seen)
-    assert failed in window_next
-
-
-def _fake_grades_root(tmp_path, window, qs):
-    """Copy the real CORRECTNESS files into tmp_path and add a synthetic
-    next-round file grading `window` (oracle entries green, rows-only
-    entries ran-clean). Named r90 so it can never collide with — and
-    silently replace — a real round's file in the copy."""
-    import shutil
-
-    repo = Path(__file__).parent.parent
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        shutil.copy(p, tmp_path / p.name)
-    fake = {n: ({"rows_match": True, "schema_match": True,
-                 "hash_match": True, "err": None}
-                if qs[n].oracle is not None else
-                {"rows_match": None, "schema_match": None,
-                 "hash_match": None, "err": "no_oracle"})
-            for n in window}
-    (tmp_path / "CORRECTNESS_r90.json").write_text(json.dumps(fake))
-
-
-def test_auto_rotation_survives_future_grades_file(tmp_path, monkeypatch):
-    """Drop a synthetic next-round grade file (grading the whole current
-    window) into a simulated repo root: _driver_grades must pick it up via
-    SPARK_GRAFT_REPO_ROOT and the recomposed window must again waste no
-    slot — proof the suite stays green when the next round's grades land.
-    No real grade state is mutated or assumed; the scenario reads only the
-    tmp root."""
-    qs = registry.all_queries()
-    window_now = queries._compute_window(*queries._driver_grades())
-    _fake_grades_root(tmp_path, window_now, qs)
-    monkeypatch.setenv("SPARK_GRAFT_REPO_ROOT", str(tmp_path))
-    green, seen = queries._driver_grades()
-    oracle_graded = {n for n in window_now if qs[n].oracle is not None}
-    assert oracle_graded <= green
-    window_next = queries._compute_window(green, seen)
-    _assert_window_invariants(window_next, green, seen, qs)
-
-
-def test_auto_rotation_saturation_forward_proof(tmp_path, monkeypatch):
-    """The state the repo will ACTUALLY be in once the next round's grades
-    land (VERDICT r5 task 1): the current window grades entirely green,
-    the oracle backlog hits zero, and every window-composition invariant
-    must still hold — including one more recomposition on top of the
-    saturated state. This is the third and last shape the
-    rotation-goes-red failure class can take; simulate it now instead of
-    discovering it at round open."""
-    qs = registry.all_queries()
-    window_now = queries._compute_window(*queries._driver_grades())
-    _fake_grades_root(tmp_path, window_now, qs)
-    monkeypatch.setenv("SPARK_GRAFT_REPO_ROOT", str(tmp_path))
-    green, seen = queries._driver_grades()
-    # Force TOTAL saturation on top of the fake round: every declared
-    # oracle green, every query seen (the end state after the backlog
-    # clears plus any stragglers).
-    sat_green = green | {n for n, q in qs.items() if q.oracle is not None}
-    sat_seen = seen | set(qs)
-    window_sat = queries._compute_window(sat_green, sat_seen)
-    _assert_window_invariants(window_sat, sat_green, sat_seen, qs)
-    # Saturated windows are all padding: rows-only re-runs first, then
-    # green oracle re-grades.
-    assert all(qs[n].oracle is None or n in sat_green for n in window_sat)
-    # And the recomposition is stable: grading the saturated window again
-    # changes nothing structural.
-    window_again = queries._compute_window(sat_green,
-                                           sat_seen | set(window_sat))
-    _assert_window_invariants(window_again, sat_green,
-                              sat_seen | set(window_sat), qs)
-
-
-def test_auto_rotation_pads_with_rows_only_at_saturation():
-    """When every oracle query is green, the window fills with rows-only
-    re-runs (free weak checks) and then green oracles — never short."""
-    qs = registry.all_queries()
-    green = {n for n, q in qs.items() if q.oracle is not None}
-    seen = set(qs)
-    window = queries._compute_window(green, seen)
-    assert len(window) == 50
-    rows_only = [n for n in window if qs[n].oracle is None]
-    assert rows_only, "saturated window should lead with rows-only re-runs"
+    declared = []
+    for path in [*PKG.glob("operators/*.py"), *PKG.glob("streaming/*.py"),
+                 PKG / "pipeline.py"]:
+        source = path.read_text()
+        if "@register(" not in source:
+            continue
+        module = ".".join(path.relative_to(PKG.parent).with_suffix("").parts)
+        assert module in sys.modules, (
+            f"{module} registers queries but is never imported")
+        declared += re.findall(r'@register\(\s*"([^"]+)"', source)
+    dupes = sorted({n for n in declared if declared.count(n) > 1})
+    assert not dupes, f"query names registered twice: {dupes}"
+    assert set(declared) <= set(qs)
 
 
 def test_coverage_md_incorporates_every_grade_file():
