@@ -26,6 +26,20 @@ flags are per-row codegen (t16); packing's Arrow boundary carries four
 scalar columns and its shard knob divides per-task state linearly
 (e51, DESIGN_SCALE packing tiers); the split moves whole clusters so
 near-dup pairs cannot cross it (e66).
+
+Materialization contract: each funnel stage's survivors (the projected
+``documents``, then exact dedup, near-dup dedup, decontamination and the
+quality filter) are materialized exactly once, through
+``plans.audit.probe_checkpoint`` under the label ``curate.<stage>``,
+before that stage is counted. Every later reader — the stage's count,
+the next stage, the mixture, the packing fold, the split join and any
+write the caller makes of the returned frames — reads the materialized
+stage instead of re-running the funnel's lineage from the ``documents``
+scan. The returned frames are therefore backed by executor-local
+checkpoint blocks (``localCheckpoint``): they need no ``unpersist`` and
+are freed once unreachable, but, like the connected-components labels,
+they are not fault-tolerant — losing an executor loses them, and the
+frames must be rebuilt by calling :func:`curate` again.
 """
 
 from __future__ import annotations
@@ -34,6 +48,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspark_ml_features_spark.functions.text import tokens, word_ngrams
+from pyspark_ml_features_spark.plans.audit import probe_checkpoint
 from pyspark_ml_features_spark.sources import table
 
 
@@ -55,8 +70,13 @@ def curate(spark: SparkSession, sf_dir: str, *,
     what a production run tunes per corpus.
 
     Returns a dict of stage DataFrames plus ``funnel``: a list of
-    (stage, docs_in, docs_out) tuples (counts are actions — the funnel
-    is the report a curation run files)."""
+    (stage, docs_in, docs_out) tuples — the report a curation run files.
+    Each stage is materialized once (a ``curate.<stage>`` checkpoint)
+    and counted from that materialization, so the returned ``kept``,
+    ``packed`` and ``split`` frames read executor-local checkpoint
+    blocks, not the ``documents`` scan (see the module docstring for
+    what that means on executor loss). A funnel that ends at 0 docs
+    returns empty ``mixture``, ``packed`` and ``split`` frames."""
     from pyspark_ml_features_spark.operators.dedup import (
         minhash_candidate_pairs,
     )
@@ -69,13 +89,15 @@ def curate(spark: SparkSession, sf_dir: str, *,
     d = (table(spark, sf_dir, "documents")
          .select("doc_id", "lang", "text",
                  F.size(tokens("text")).cast("bigint").alias("n_tokens")))
+    d = probe_checkpoint(d, "curate.documents")
     n0 = d.count()
 
     # 1. EXACT dedup (e1/e36 semantics): canonical doc = min doc_id per
     # normalized text; at 100 TB the key is the 64-bit fingerprint.
     canon = (d.groupBy(F.lower(F.trim(F.col("text"))).alias("k"))
              .agg(F.min("doc_id").alias("doc_id")))
-    d1 = d.join(canon.select("doc_id"), "doc_id")
+    d1 = probe_checkpoint(d.join(canon.select("doc_id"), "doc_id"),
+                          "curate.exact_dedup")
     n1 = d1.count()
     funnel.append(("exact_dedup", n0, n1))
 
@@ -91,7 +113,8 @@ def curate(spark: SparkSession, sf_dir: str, *,
     clusters = cc.select(F.col("node").alias("doc_id"), "cluster_id")
     keep_ids = (clusters.groupBy("cluster_id")
                 .agg(F.min("doc_id").alias("doc_id")))
-    d2 = d1.join(keep_ids.select("doc_id"), "doc_id")
+    d2 = probe_checkpoint(d1.join(keep_ids.select("doc_id"), "doc_id"),
+                          "curate.near_dup_dedup")
     n2 = d2.count()
     funnel.append(("near_dup_dedup", n1, n2))
 
@@ -116,8 +139,9 @@ def curate(spark: SparkSession, sf_dir: str, *,
                          .alias("contamination"))
                     .filter(F.col("contamination") >= contamination_max)
                     .select("doc_id"))
-    d3 = (d2.filter(F.col("doc_id") % 5 != 0)
-          .join(contaminated, "doc_id", "left_anti"))
+    d3 = probe_checkpoint(d2.filter(F.col("doc_id") % 5 != 0)
+                          .join(contaminated, "doc_id", "left_anti"),
+                          "curate.decontaminate")
     n3 = d3.count()
     funnel.append(("decontaminate", n2, n3))
 
@@ -129,9 +153,9 @@ def curate(spark: SparkSession, sf_dir: str, *,
     frac_alpha = (F.size(F.filter("toks", lambda x: x.rlike("[a-z]")))
                   / F.size("toks"))
     lo, hi = mean_word_len_bounds
-    d4 = (q.filter((mwl >= lo) & (mwl <= hi)
-                   & (frac_alpha >= min_frac_alpha))
-          .drop("toks"))
+    d4 = probe_checkpoint(q.filter((mwl >= lo) & (mwl <= hi)
+                                   & (frac_alpha >= min_frac_alpha))
+                          .drop("toks"), "curate.quality_filter")
     n4 = d4.count()
     funnel.append(("quality_filter", n3, n4))
 
@@ -139,15 +163,17 @@ def curate(spark: SparkSession, sf_dir: str, *,
     # equal target; weight = target_share * total / lang_tokens.
     lang_tok = (d4.groupBy("lang")
                 .agg(F.sum("n_tokens").alias("lang_tokens")))
-    n_langs = lang_tok.count()
+    # An empty funnel has no languages and so no mixture rows; the max()
+    # only keeps the unused equal-share literal defined.
+    target = 1.0 / max(lang_tok.count(), 1)
     mixture = (lang_tok
                .withColumn("total",
                            F.sum("lang_tokens").over(Window.partitionBy()))
                .select("lang", "lang_tokens",
                        F.round(F.col("lang_tokens") / F.col("total"), 6)
                        .alias("actual_share"),
-                       F.lit(round(1.0 / n_langs, 6)).alias("target_share"),
-                       F.round(F.lit(1.0 / n_langs) * F.col("total")
+                       F.lit(round(target, 6)).alias("target_share"),
+                       F.round(F.lit(target) * F.col("total")
                                / F.col("lang_tokens"), 6).alias("weight")))
 
     # 6. PACK (e51's fold) into capacity-bounded bins per (lang, shard).

@@ -16,8 +16,9 @@ n = df.count()
 print("entry rows:", n, "schema:", df.columns)
 assert n > 0
 
-# 2. queries vs oracles at sf0.01, order-insensitive value hash
-SF = "/root/testdata/sf0.01"
+# 2. queries vs oracles at the test suite's parity scale (sf0.01 unless
+# PARITY_SF_DIR overrides it), order-insensitive value hash
+from tests.conftest import SF_DIR as SF
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")

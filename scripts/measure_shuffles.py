@@ -14,7 +14,7 @@ Prints a markdown table and one JSON line; with --write it also splices
 the table into PLAN_AUDIT.md under the "Measured runtime volumes" section
 (scripts/gen_plan_audit.py preserves that section across regenerations).
 
-Usage: cd /tmp && python /root/repo/scripts/measure_shuffles.py [--write]
+Usage: cd /tmp && python <repo>/scripts/measure_shuffles.py [--write]
 """
 
 from __future__ import annotations
@@ -23,7 +23,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE  # noqa: E402
 from pyspark_ml_features_spark import registry  # noqa: E402
@@ -31,7 +32,7 @@ from pyspark_ml_features_spark.plans.metrics import runtime_metrics  # noqa: E40
 from pyspark_ml_features_spark.session import get_spark  # noqa: E402
 
 
-PLAN_AUDIT = "/root/repo/PLAN_AUDIT.md"
+PLAN_AUDIT = os.path.join(ROOT, "PLAN_AUDIT.md")
 MARKER = "\n## Measured runtime volumes"
 
 

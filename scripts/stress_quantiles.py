@@ -20,16 +20,17 @@ Claims under test:
    digest merge over distinct values dominates, not the row scan;
    gate: ≤1.5× drift on re-runs).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_quantiles.py
+Usage: cd /tmp && python <repo>/scripts/stress_quantiles.py
 Pinned row in BASELINE.md ("SCALE TIER r8: quantile/histogram").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

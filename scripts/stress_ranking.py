@@ -16,16 +16,17 @@ Claims under test:
 Tiers: lineitem long-form (3 features/row) at sf0.01, sf0.1, and sf0.1
 replicated ×5/×10 with tie-break-preserving unique keys.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_ranking.py
+Usage: cd /tmp && python <repo>/scripts/stress_ranking.py
 Pinned row in BASELINE.md ("SCALE TIER r7: distributed ranking").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

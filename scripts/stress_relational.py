@@ -22,7 +22,7 @@ REGISTERED queries run unmodified on it. Per (tier, query): min-of-2 wall
 on the noop sink + runtime_metrics (shuffle MiB, peak task MiB) from a
 collect() pass.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_relational.py
+Usage: cd /tmp && python <repo>/scripts/stress_relational.py
 Results recorded in DESIGN_SCALE.md ("Relational-family scaling").
 """
 
@@ -33,7 +33,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

@@ -23,7 +23,7 @@ plans/metrics.py on a collect):
    splits the hot partition at runtime (wall/peak drop); the manual
    salted_join (functions/skew.py) is the fallback measured alongside.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_skew.py
+Usage: cd /tmp && python <repo>/scripts/stress_skew.py
 Results recorded in DESIGN_SCALE.md ("Skew behavior, measured").
 """
 
@@ -34,7 +34,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession, Window  # noqa: E402

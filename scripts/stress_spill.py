@@ -19,7 +19,7 @@ Shapes:
 Per run: wall, spill MiB (plans/metrics.py), and a result CHECKSUM that
 must match across memory tiers (spill must not change answers).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_spill.py
+Usage: cd /tmp && python <repo>/scripts/stress_spill.py
 (child mode: stress_spill.py --child <tier_dir> <shape> — internal)
 Results recorded in DESIGN_SCALE.md ("Memory pressure, measured").
 """
@@ -33,7 +33,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = f"/tmp/pmfs_stress_spill_{os.getpid()}"
 

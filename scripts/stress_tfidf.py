@@ -23,16 +23,17 @@ ways at ×1/×5/×10 document replication:
 
 Wall grows sublinearly-to-linearly (gate: ≤1.5× drift on re-runs).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_tfidf.py
+Usage: cd /tmp && python <repo>/scripts/stress_tfidf.py
 Pinned row in BASELINE.md ("SCALE TIER r8: TF-IDF vocabulary growth").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

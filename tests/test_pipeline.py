@@ -11,6 +11,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from pyspark_ml_features_spark.pipeline import curate, funnel_report
+from pyspark_ml_features_spark.plans.audit import (
+    capture_checkpoint_plans,
+    plan_text,
+)
 from tests.conftest import SF_DIR
 
 # The sf0.1 integration pin is the suite's single heaviest fixture
@@ -60,8 +64,53 @@ def test_curation_pipeline_pinned_counts_sf01(spark):
                or 0) == E76_TRAIN_DOCS_SF01
 
 
-def test_curation_pipeline_end_state(spark):
-    r = curate(spark, SF_DIR)
+# One materialization per funnel stage, in funnel order (the
+# pipeline's materialization contract).
+CURATE_STAGE_LABELS = [
+    "curate.documents",
+    "curate.exact_dedup",
+    "curate.near_dup_dedup",
+    "curate.decontaminate",
+    "curate.quality_filter",
+]
+
+
+@pytest.fixture(scope="module")
+def curated(spark):
+    """One default curate() run at the parity scale, with the plans of
+    every checkpoint it took."""
+    with capture_checkpoint_plans() as captured:
+        r = curate(spark, SF_DIR)
+    return r, list(captured)
+
+
+def test_curation_stages_are_materialized_once(curated):
+    """Each funnel stage is checkpointed exactly once, in funnel order,
+    and the returned frames read those checkpoints: none of their plans
+    re-scans ``documents``."""
+    r, captured = curated
+    labels = [c["label"] for c in captured
+              if c["label"].startswith("curate.")]
+    assert labels == CURATE_STAGE_LABELS
+    for key in ("kept", "packed", "split"):
+        assert "FileScan" not in plan_text(r[key]), (
+            f"{key} re-scans its source instead of reading the "
+            f"materialized stage")
+
+
+def test_curation_pipeline_empty_funnel(spark):
+    """A quality bound no document meets empties the funnel; the
+    mixture, packing and split stages must return empty frames, not
+    raise."""
+    r = curate(spark, SF_DIR, min_frac_alpha=1.1)
+    assert r["funnel"][-1][0] == "quality_filter"
+    assert r["funnel"][-1][2] == 0
+    for key in ("mixture", "packed", "split"):
+        assert r[key].count() == 0, key
+
+
+def test_curation_pipeline_end_state(curated):
+    r, _ = curated
 
     # funnel is monotone non-increasing and ends non-empty
     counts = [(n_in, n_out) for _, n_in, n_out in r["funnel"]]

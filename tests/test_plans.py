@@ -440,6 +440,9 @@ FIXPOINT_QUERIES = {
     # clustering and the warm-started delta stage) — both edge builds
     # (bucket joins) and every round reach the capture audit
     "e114_incremental_semantic_dedup": set(),
+    # the composed curation pipeline checkpoints every funnel stage
+    # (curate.*) and runs a CC fixpoint between them
+    "e76_curation_funnel": set(),
 }
 # Max ResolvedHint nodes per CAPTURED plan (the analyzed-plan hint ratchet
 # extended into fixpoint internals): e58's single source-level
@@ -455,6 +458,10 @@ FIXPOINT_MAX_HINTS = {
     # e110.flags carries e52's m-bounded bloom-position broadcast
     # (|bloom| <= BLOOM_M = 4096 rows by construction)
     "e110_decontam_pack_audit": 1,
+    # curate.decontaminate carries one source-level F.broadcast(bench):
+    # the benchmark slice's distinct shingle set, eval-sized by
+    # construction (e55's decontamination rule)
+    "e76_curation_funnel": 1,
 }
 
 
